@@ -108,7 +108,7 @@ object Tables {
       "testdata contract drift detected:\n  " + problems.mkString("\n  "))
   }
 
-  /** Session defaults shared by Verify / Bench / tests: tuned for local[N]
+  /** Session defaults shared by Verify / perfbench / tests: tuned for local[N]
     * but written the way a 1000-executor cluster session would be (AQE on,
     * explicit shuffle parallelism, UTC).
     */

@@ -207,13 +207,4 @@ object Chunker {
     }
     spark.createDataFrame(out, r.schema.add("_chunk", "long", nullable = false))
   }
-
-  /** Oversize guard as a standalone check (data.py:304-307). */
-  def checkNoOversizeRow(df: DataFrame, sizeCol: String,
-                         sizeLimit: Long = DefaultSizeLimit): Either[WarehouseError, Unit] = {
-    val m = df.agg(max(col(sizeCol))).collect()(0)
-    if (!m.isNullAt(0) && m.getAs[Number](0).longValue() > sizeLimit)
-      Left(RowOversize(m.getAs[Number](0).longValue(), sizeLimit))
-    else Right(())
-  }
 }

@@ -144,22 +144,4 @@ object Ingest {
     }
     spark.createDataFrame(sliced, r.schema)
   }
-
-  /** `expand_iterable` (schema.py:102-139) — data-side analog: depth-first
-    * flatten of nested array columns via repeated `flatten`, then explode.
-    */
-  def explodeFlat(df: DataFrame, arrayCol: String, as: String): DataFrame = {
-    var c: Column = col(arrayCol)
-    var dt = df.schema(arrayCol).dataType
-    // flatten nested array-of-array down to one level
-    import org.apache.spark.sql.types.ArrayType
-    while (dt match {
-        case ArrayType(_: ArrayType, _) => true
-        case _ => false
-      }) {
-      c = flatten(c)
-      dt = dt.asInstanceOf[ArrayType].elementType
-    }
-    df.withColumn(as, explode(c))
-  }
 }

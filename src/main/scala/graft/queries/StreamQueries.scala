@@ -229,47 +229,6 @@ object StreamQueries {
       .orderBy("user_id", "session_start")
   }
 
-  /** The fixed machinery cost every streaming gate pays, isolated: the
-    * same staged protocol as [[sessionsGateBody]] (events + one
-    * far-future sentinel staged chronologically,
-    * maxFilesPerTrigger=1, watermark, 4 state partitions, AvailableNow)
-    * around a NOOP stateful kernel (windowed count → noop sink). Bench
-    * times this once per run and stamps it into the artifact meta as
-    * `stream_floor_sec`, so cross-round s-gate deltas can subtract the
-    * floor from artifacts alone — the r9 round's +16% streaming drift
-    * (cold per-JVM state-store/codegen init under the fresh-JVM
-    * protocol) was attributable only through PERF_NOTES prose.
-    */
-  def machineryFloor(s: SparkSession, dir: String): Unit = {
-    val schema = eventsSchema(s, dir)
-    val staged = scratchDir("graft-floor")
-    val ckpt = scratchDir("graft-floor-ckpt")
-    val dest0 = staged.resolve("0.parquet")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"), dest0)
-    dest0.toFile.setLastModified(1000000000L)
-    stageSentinels(s, schema("ts").dataType, staged, Seq(
-      1 -> Seq((-1L, 2051222400L * 1000000000L, -1L, "tick", 0.0, "{}"))))
-    withShufflePartitions(s, 4) {
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-        .transform(graft.Tables.normalizeTs(_))
-        .select("event_id", "ts")
-      val q = stream
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "1 hour"))
-        .count()
-        .writeStream
-        .format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 120000, ckpt, staged)
-    }
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s01_stream_hourly" -> ((s: SparkSession, dir: String) => {
       // the file-stream source needs a directory: stage the events file

@@ -63,11 +63,11 @@ object SchemaInference {
       }
       LRecord(fields.toVector, fields.map(_._1 -> idx).toMap)
     case m: java.util.Map[_, _] => walk(m.asScala, idx, errors)
-    case it: Iterable[_] =>
-      foldList(it.toSeq, idx, errors)
-    case it: java.util.List[_] => foldList(it.asScala.toSeq, idx, errors)
+    case it: Iterable[_] => foldList(it.toSeq.map(walk(_, idx, errors)), errors)
+    case it: java.util.List[_] =>
+      foldList(it.asScala.toSeq.map(walk(_, idx, errors)), errors)
     case arr: Array[_] if !arr.isInstanceOf[Array[Byte]] =>
-      foldList(arr.toSeq, idx, errors)
+      foldList(arr.toSeq.map(walk(_, idx, errors)), errors)
     case scalar =>
       tagOf(scalar) match {
         case Some(t) => Lat.scalar(t)
@@ -77,8 +77,8 @@ object SchemaInference {
 
   private final class ErrorCounter { var n: Long = 0L }
 
-  private def foldList(elems: Seq[Any], idx: Long, errors: ErrorCounter): Lat = {
-    val lats = elems.map(walk(_, idx, errors))
+  /** One list's already-walked elements, shared by both walkers. */
+  private def foldList(lats: Seq[Lat], errors: ErrorCounter): Lat = {
     val hasRecord = lats.exists(_.isInstanceOf[LRecord])
     if (hasRecord) {
       // dicts win; non-dict elements are type errors (schema.py:725-729)
@@ -127,15 +127,10 @@ object SchemaInference {
         Sanitize.cleanFieldKey(e.getKey) -> walkJson(e.getValue, idx, errors)
       }
       LRecord(fields, fields.map(_._1 -> idx).toMap)
-    } else if (node.isArray) {
-      val elems = node.elements().asScala.toSeq.map(walkJson(_, idx, errors))
-      val hasRecord = elems.exists(_.isInstanceOf[LRecord])
-      if (hasRecord) {
-        errors.n += elems.count(l => !l.isInstanceOf[LRecord] && l != LEmpty)
-        elems.collect { case r: LRecord => r: Lat }
-          .reduceOption(Lat.merge).getOrElse(LEmpty)
-      } else LList(elems.reduceOption(Lat.merge).getOrElse(LEmpty))
-    } else if (node.isNull) LEmpty
+    } else if (node.isArray)
+      foldList(node.elements().asScala.toSeq.map(walkJson(_, idx, errors)),
+        errors)
+    else if (node.isNull) LEmpty
     else if (node.isTextual) Lat.scalar(TStr)
     else if (node.isBoolean) Lat.scalar(TBool)
     else if (node.isIntegralNumber) Lat.scalar(TInt)

@@ -107,9 +107,8 @@ final case class Deconstructed(lat: Lat, records: Long, typeErrors: Long,
   def merge(other: Deconstructed): Deconstructed = {
     val mergedLat = Lat.merge(lat, other.lat)
     val adding = (lat, other.lat, mergedLat) match {
-      case (Lat.LRecord(_, fa), Lat.LRecord(_, fb), Lat.LRecord(_, fm)) =>
+      case (_: Lat.LRecord, _: Lat.LRecord, Lat.LRecord(_, fm)) =>
         // distinct first-introduction indices across the union of paths
-        val _ = (fa, fb)
         fm.values.toSet.size.toLong
       case _ => addingFields + other.addingFields
     }

@@ -186,18 +186,19 @@ object Skipping {
 
   /** Zone-free epoch micros of a TIMESTAMP_NTZ column, assembled from
     * field extractions that never consult the session zone (casting
-    * NTZ→TIMESTAMP would): days since epoch × 86400e6 + the
-    * MICROSECONDS date_part, which per the SQL/Postgres convention
-    * Spark follows is seconds*1e6 + fractional micros. The result is
-    * numerically identical to the NTZ value's internal Long micros —
-    * the same domain a Catalyst NTZ literal carries, so driver-side
-    * comparisons line up exactly.
+    * NTZ→TIMESTAMP would): days since epoch × 86400e6 + hours + minutes
+    * + the SECOND date_part × 1e6. SECOND is a DECIMAL(8,6) carrying
+    * the fractional micros (`5.123456` for `…:05.123456`), so the
+    * scaled value is exact; Spark 4 rejects a MICROSECONDS extraction
+    * (INVALID_EXTRACT_FIELD). The result is numerically identical to
+    * the NTZ value's internal Long micros — the same domain a Catalyst
+    * NTZ literal carries, so driver-side comparisons line up exactly.
     */
   def ntzMicros(c: Column): Column =
     unix_date(c.cast(DateType)).cast("long") * lit(86400000000L) +
       hour(c).cast("long") * lit(3600000000L) +
       minute(c).cast("long") * lit(60000000L) +
-      date_part(lit("MICROSECONDS"), c).cast("long")
+      (date_part(lit("SECOND"), c) * lit(1000000L)).cast("long")
 
   /** Order-faithful STRING encoding of a bound value (applied to the
     * already-aggregated min/max, so it runs once per file, not per

@@ -53,8 +53,7 @@ final case class ManifestEntry(rel: String, bytes: Long, mtime: Long)
   * registered as a temp view so `query(sql)` covers the full Catalyst SQL
   * surface.
   */
-final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
-                           val skippingEnabled: Boolean = true)
+final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String)
     extends Warehouse {
 
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -179,20 +178,17 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * analyzers, and the MoR verbs so "what is live" has exactly one
     * definition.
     */
-  private def rawLiveFrame(name: String): DataFrame = {
-    val raw = manifestScanFrame(name).getOrElse {
+  private def rawLiveFrame(name: String): DataFrame =
+    manifestScanFrame(name).getOrElse {
       val plain =
         if (tombstonedRels(name).nonEmpty) listedScanFrame(name)
         else graft.sources.Sources.parquetMerged(spark,
           tablePath(name).toString)
-      if (!skippingEnabled) plain
-      else org.apache.spark.sql.GraftFileIndexBridge
+      org.apache.spark.sql.GraftFileIndexBridge
         .mapFileIndex(plain)(base =>
           new org.apache.spark.sql.GraftPruningFileIndex(base,
             pruneMetaThunk(name)))
     }
-    raw
-  }
 
   /** Scan built from an explicit tombstone-subtracted listing — the
     * manifest-absent fallback for tables with retired files. Fresh
@@ -2425,10 +2421,8 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       }
     Some(org.apache.spark.sql.GraftFileIndexBridge.manifestFrame(
       spark, index, dataSchema,
-      base =>
-        if (!skippingEnabled) base
-        else new org.apache.spark.sql.GraftPruningFileIndex(base,
-          pruneMetaThunk(name))))
+      base => new org.apache.spark.sql.GraftPruningFileIndex(base,
+        pruneMetaThunk(name))))
   }
 
   /** A retained history generation parsed from
@@ -3990,8 +3984,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * in the scan's `FileIndex` (r11: `GraftPruningFileIndex` — every
     * [[get]] frame prunes any predicate Catalyst pushes onto it, SQL
     * views included), this is literally the filtered scan; the verb
-    * survives as the documented entry point and for the
-    * `skippingEnabled = false` comparison baseline. Result rows are
+    * survives as the documented entry point. Result rows are
     * IDENTICAL to an unpruned filter by construction — stats only
     * remove files that provably cannot contribute; statless files
     * always read; merge-on-read tombstones still apply.

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * magnitude slower, and nothing fails. Round 8 caught exactly that:
   * `TopTokenCount`'s generated code used a generic `HashMap<Object,
   * Integer>`, which javac accepts but janino rejects, and the kernel
-  * quietly ran interpreted until KernelBench noticed the timings. This
+  * quietly ran interpreted until a kernel timing exposed it. This
   * spec closes that hole permanently: it evaluates every custom
   * expression with `spark.sql.codegen.fallback=false` and
   * `factoryMode=CODEGEN_ONLY`, so a janino rejection is a test failure,

@@ -215,6 +215,47 @@ class Round12Spec extends SparkSpec {
     assert(got == want, s"NTZ metadata agg drifts: $got vs $want")
   }
 
+  test("analyzeStats succeeds on a TIMESTAMP_NTZ column read back from " +
+    "parquet; range filters through get prune files and match plain parquet") {
+    val sps = spark; import sps.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft-r12-ntz-src")
+      .resolve("src").toString
+    val base = java.time.LocalDateTime.of(2021, 1, 1, 0, 0, 0)
+    (0L until 4000L).map { i =>
+      (i, base.plusMinutes(i).plusNanos((i * 7919L % 1000000L) * 1000L))
+    }.toDF("id", "ts").write.parquet(src)
+    val plain = spark.read.parquet(src)
+    assert(plain.schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    val wh = tmpWh("graft-r12-ntz-analyze")
+    // four ordered appends with disjoint ts ranges; `update` keeps the
+    // NTZ type (`load` widens it to TIMESTAMP through the api schema)
+    (0L until 4L).foreach { k =>
+      unwrap(wh.update("t", plain.filter(col("id") >= k * 1000L &&
+        col("id") < (k + 1L) * 1000L).coalesce(1)))
+    }
+    assert(unwrap(wh.get("t")).schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    val analyzed = wh.analyzeStats("t")
+    assert(analyzed.isRight, s"analyzeStats failed: $analyzed")
+    val total = filesRead(unwrap(wh.get("t")))
+    assert(total == 4L)
+    val lo = base.plusMinutes(1200).plusNanos(500000L)
+    val hi = base.plusMinutes(1800)
+    val pred = col("ts") > lit(lo) && col("ts") <= lit(hi)
+    val viaGet = unwrap(wh.get("t")).filter(pred)
+    assert(filesRead(viaGet) < total,
+      s"NTZ range did not prune: ${filesRead(viaGet)}/$total")
+    val got = viaGet.select("id", "ts").collect().toSeq.sortBy(_.getLong(0))
+    val want = plain.filter(pred).select("id", "ts").collect().toSeq
+      .sortBy(_.getLong(0))
+    assert(got.nonEmpty && got == want)
+    // the metadata fold decodes the same NTZ bounds
+    val aggWant = plain.agg(count(lit(1)).as("cnt"), min("ts").as("min_ts"),
+      max("ts").as("max_ts")).head
+    assert(unwrap(wh.statsAggFast("t", Seq("ts"))).head == aggWant)
+  }
+
   test("string/date Z-order clusters BOTH dimensions; content preserved") {
     val sps = spark; import sps.implicits._
     val wh = tmpWh("graft-r12-zstr")

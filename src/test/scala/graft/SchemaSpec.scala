@@ -113,6 +113,15 @@ class InferenceSpec extends AnyFunSuite {
     assert(d.typeErrors == 1)
     val repr = Widen.condense(d.lat)
     assert(repr.head.fieldType == "RECORD" && repr.head.mode == "REPEATED")
+    // the distributed JSON walker applies the same list fold
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val dj = SchemaInference.deconstructJson(
+      Seq("""{"xs":[{"k":1},"stray"]}""").toDS())
+    assert(dj.typeErrors == 1)
+    val jrepr = Widen.condense(dj.lat)
+    assert(jrepr.map(f => (f.name, f.fieldType, f.mode)) ==
+      Seq(("xs", "RECORD", "REPEATED")))
   }
 
   test("temporal scala types map through the precedence chain") {
